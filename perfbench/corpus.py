@@ -1,4 +1,5 @@
-"""Seeded document corpora for ``curation_corpus`` and ``index_append``.
+"""Seeded document corpora for ``curation_corpus``: its curation
+documents and its index batch.
 
 A base corpus of natural-vocabulary documents is generated once per
 checkout with ``tools/corpus_gen.natural_documents`` (Zipf vocabulary,

@@ -2,7 +2,7 @@
 every workload.
 
 One run is: host calibration, several timed set-ups (the median is
-``setup_s``), one warm-up pass that doubles as the correctness
+``setup_s``), one untimed warm-up pass that doubles as the correctness
 reference, a closed-loop window of passes, checks, and teardown. In a
 traced run the window is split: the first half runs untraced, the
 second half records spans, and the difference of the two halves' median
@@ -29,7 +29,7 @@ from perfbench.trace import Tracer
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CACHE = os.path.join(ROOT, ".perfbench_cache")
 NPROC = os.cpu_count() or 1
-SETUP_REPS = 3
+SETUP_REPS = 7
 
 # Plan nodes that run Python: UDF evaluation, pandas/Arrow maps and
 # UDTFs, plus Python data source scans ("BatchScan <name>[...] (Python)").
@@ -60,7 +60,13 @@ def prepare_env() -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
     )
+    # The driver heap is pinned through the program's own knob. At the
+    # program's 8g default the JVM grows its heap lazily, so peak RSS on
+    # curation_corpus ranged 2.7-5.1 GB over ten seeds on a 4-core host
+    # (interquartile spread 0.54 of the median) and no memory bound could
+    # hold; at 2g the same spread was 0.15-0.19.
     os.environ["SPARK_GRAFT_DRIVER_MEMORY"] = "2g"
+    # master and shuffle width: the program's defaults for local[NPROC]
     os.environ.pop("SPARK_GRAFT_MASTER", None)
     os.environ.pop("SPARK_GRAFT_SHUFFLE_PARTITIONS", None)
     confs = {
@@ -457,57 +463,40 @@ def summarize(results: list[OpResult], passes: list[float]) -> dict:
     }
 
 
-class Composite(Workload):
-    """Several workloads run as one: one JVM start and one cold pass pay
-    for all of them. A pass is the parts' ops in order; hooks and checks
-    go to the part that owns the op."""
+# -- workloads and their inputs ------------------------------------------------
 
-    def __init__(self, name: str, parts: list[Workload]):
-        self.name = name
-        self.parts = parts
-        self.owner: dict[str, Workload] = {}
+WORKLOADS = ["odata_ingest", "curation_corpus"]
+BUILD_LIMIT_S = 800
 
-    def build(self) -> None:
-        for w in self.parts:
-            w.build()
 
-    def setup(self, spark) -> None:
-        for w in self.parts:
-            w.setup(spark)
+def make_workload(name: str, seed: int, tracer: Tracer) -> Workload:
+    if name == "odata_ingest":
+        from perfbench.wl_odata import ODataIngest
 
-    def unsetup(self) -> None:
-        for w in self.parts:
-            w.unsetup()
+        return ODataIngest(seed, tracer)
+    if name == "curation_corpus":
+        from perfbench.wl_curation import CurationCorpus
 
-    def fixture_pids(self) -> set[int]:
-        return set().union(*(w.fixture_pids() for w in self.parts))
+        return CurationCorpus(seed, tracer)
+    raise ValueError(f"unknown workload {name!r}; the workloads are {WORKLOADS}")
 
-    def ops(self, pass_no: int):
-        out = []
-        for w in self.parts:
-            for name, fn in w.ops(pass_no):
-                self.owner[name] = w
-                out.append((name, fn))
-        return out
 
-    def before_op(self, op_id: str) -> None:
-        self.owner[op_id.split("-", 1)[1]].before_op(op_id)
-
-    def after_op(self, op_id: str) -> None:
-        self.owner[op_id.split("-", 1)[1]].after_op(op_id)
-
-    def warmup_check(self, spark) -> list[str]:
-        return [p for w in self.parts for p in w.warmup_check(spark)]
-
-    def after_pass(self, spark) -> list[str]:
-        return [p for w in self.parts for p in w.after_pass(spark)]
-
-    def layer_metrics(self, spark, results, traced_ops, untraced_ops, group_metrics) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for w in self.parts:
-            out.update(w.layer_metrics(spark, results, traced_ops, untraced_ops, group_metrics))
-        return out
-
-    def close(self) -> None:
-        for w in self.parts:
-            w.close()
+def build_inputs(workload: str, seed: int) -> None:
+    """Build the workload's cached inputs in a process of its own, so
+    neither this process nor the measured JVM carries the memory of
+    generating them. Waits for every process the build started."""
+    script = os.path.join(ROOT, "perfbench", "build_inputs.py")
+    child = subprocess.Popen([sys.executable, script, workload, str(seed)], cwd=ROOT, start_new_session=True)
+    try:
+        code = child.wait(timeout=BUILD_LIMIT_S)
+    except BaseException:
+        pids = descendants(child.pid) + [child.pid]
+        try:
+            os.killpg(child.pid, signal.SIGKILL)  # the build's JVM is in its process group
+        except ProcessLookupError:
+            pass
+        child.wait()
+        wait_gone(pids, 10)
+        raise
+    if code != 0:
+        raise RuntimeError(f"building the {workload} inputs for seed {seed} exited {code}")

@@ -17,13 +17,11 @@ untraced and a traced half, and the spans are written to
 ``.perfbench_cache/traces/``. Both lists, with units and bounds, are in
 ``BENCHMARK.json``.
 
-Workloads: ``odata_ingest`` and ``curation_corpus`` (the curation ops
-followed by the ``index_append`` ops) are the ones ``BENCHMARK.json``
-lists. ``index_append`` alone and ``relational_sf01`` (ten relational
-suite queries at a generated sf 0.1, checked against the suite's DuckDB
-oracles) run the same way by name; they are left out of
-``BENCHMARK.json`` because each run costs a JVM start and a cold pass,
-and four workloads' runs do not fit the run budget on a 4-core host.
+Workloads: ``odata_ingest`` (the OData connector against a loopback
+service) and ``curation_corpus`` (the curation operators, then the
+incremental-index write path). The inputs are built first, in a child
+process (``build_inputs.py``), and are not part of any metric but
+``setup.input_gen_s``.
 """
 
 from __future__ import annotations
@@ -41,11 +39,11 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
-REQUIRED = ["erpl_web_spark/__init__.py", "bench.py", "tools/corpus_gen.py", "tools/check_oracle.py"]
-WORKLOADS = ["odata_ingest", "relational_sf01", "curation_corpus", "index_append"]
+from perfbench import harness, stats  # noqa: E402
+from perfbench.trace import Tracer  # noqa: E402
+
+REQUIRED = ["erpl_web_spark/__init__.py", "bench.py", "tools/corpus_gen.py"]
 RUN_LIMIT_S = 170
-
-
 
 _T0 = time.perf_counter()
 
@@ -64,32 +62,7 @@ def units(kind: str) -> dict[str, str]:
         return {m["name"]: m["unit"] for m in json.load(fh)[kind]}
 
 
-def make_workload(name: str, seed: int, tracer):
-    from perfbench.harness import Composite
-
-    if name == "odata_ingest":
-        from perfbench.wl_odata import ODataIngest
-
-        return ODataIngest(seed, tracer)
-    if name == "relational_sf01":
-        from perfbench.wl_relational import Relational
-
-        return Relational(seed, tracer)
-    from perfbench.wl_index import IndexAppend
-
-    if name == "index_append":
-        return IndexAppend(seed, tracer)
-    from perfbench.wl_curation import Curation
-
-    # The curation ops, then the seed's batch appended to the index
-    # history: one JVM start and one cold pass cover both layers.
-    return Composite(name, [Curation(seed, tracer), IndexAppend(seed, tracer)])
-
-
 def run(args) -> dict:
-    from perfbench import harness, stats
-    from perfbench.trace import Tracer
-
     _phase("start")
     harness.prepare_env()
     from bench import _contention_snapshot, _ext_cores, canary_sec
@@ -101,7 +74,7 @@ def run(args) -> dict:
 
     _phase("calibrated")
     tracer = Tracer(False)
-    wl = make_workload(args.workload, args.seed, tracer)
+    wl = harness.make_workload(args.workload, args.seed, tracer)
     meter = harness.TreeMeter()
     results: list[harness.OpResult] = []
     problems: list[str] = []
@@ -109,10 +82,8 @@ def run(args) -> dict:
         t0 = time.perf_counter()
         # Seed-independent inputs are built by whichever run comes first in
         # a checkout, so only that run takes the build time.
-        from perfbench.wl_index import build_history
-
-        build_history()
-        wl.build()
+        harness.build_inputs(args.workload, args.seed)
+        wl.build()  # the inputs are cached now: this only finds them
         input_s = time.perf_counter() - t0
         signal.alarm(RUN_LIMIT_S)  # the run proper, after any build
 
@@ -212,13 +183,11 @@ def run(args) -> dict:
         if meter.is_alive():
             meter.stop()
         wl.close()
-        harness.shutdown_jvm()  # also after a failed build, which may have started the JVM
+        harness.shutdown_jvm()
         _phase(f"torn down in {time.perf_counter() - t0:.2f}s")
 
 
 def layer_metrics(wl, spark, tracer, results, traced, traced_passes, untraced, passes, extra) -> dict:
-    from perfbench import harness, stats
-
     out: dict[str, float] = {}
     traced_ids = [r.name for r in traced]
     groups = harness.spark_metrics_by_group(spark, traced_ids)
@@ -250,7 +219,7 @@ def layer_metrics(wl, spark, tracer, results, traced, traced_passes, untraced, p
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=harness.WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)

@@ -62,17 +62,22 @@ class ODataIngest(harness.Workload):
     # -- inputs / fixture ----------------------------------------------------
 
     def build(self) -> None:
-        data_path = os.path.join(self.dir, "rows.pkl")
-        if not os.path.exists(data_path):
+        """Generate the seed's rows (the fixture serves them from the
+        pickle) and the reference parquet. The filter literal goes to a
+        small sidecar, so reading it loads none of the rows."""
+        self.data_path = os.path.join(self.dir, "rows.pkl")
+        meta_path = os.path.join(self.dir, "meta.json")
+        if not os.path.exists(meta_path):
             os.makedirs(self.dir, exist_ok=True)
             data = fx.generate(self.seed, V4_ROWS, V2_ROWS)
             _expected_tables(data, self.dir)
-            with open(data_path + ".tmp", "wb") as fh:
+            with open(self.data_path, "wb") as fh:
                 pickle.dump(data, fh, protocol=pickle.HIGHEST_PROTOCOL)
-            os.replace(data_path + ".tmp", data_path)
-        with open(data_path, "rb") as fh:
-            self.filter_country = pickle.load(fh)["filter_country"]
-        self.data_path = data_path
+            with open(meta_path + ".tmp", "w") as fh:
+                json.dump({"filter_country": data["filter_country"]}, fh)
+            os.replace(meta_path + ".tmp", meta_path)  # written last: marks the inputs complete
+        with open(meta_path) as fh:
+            self.filter_country = json.load(fh)["filter_country"]
 
     def setup(self, spark) -> None:
         from erpl_web_spark.odata.datasource import ensure_registered
