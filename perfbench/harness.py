@@ -2,11 +2,11 @@
 every workload.
 
 One run is: host calibration, several timed set-ups (the median is
-``setup_s``), one untimed warm-up pass that doubles as the correctness
-reference, a closed-loop window of passes, checks, and teardown. In a
-traced run the window is split: the first half runs untraced, the
-second half records spans, and the difference of the two halves' median
-pass times is the tracing overhead.
+``setup_s``), untimed warm-up passes of which the first doubles as the
+correctness reference, a closed-loop window of passes, checks, and
+teardown. In a traced run the window is split: the first half runs
+untraced, the second half records spans, and the difference of the two halves'
+``pass_s`` is the tracing overhead.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from perfbench.trace import Tracer
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CACHE = os.path.join(ROOT, ".perfbench_cache")
 NPROC = os.cpu_count() or 1
-SETUP_REPS = 7
+SETUP_REPS = 5
 
 # Plan nodes that run Python: UDF evaluation, pandas/Arrow maps and
 # UDTFs, plus Python data source scans ("BatchScan <name>[...] (Python)").
@@ -365,6 +365,8 @@ class Workload:
     """Interface every workload implements."""
 
     name = ""
+    # untimed passes before the window; the first is the correctness reference
+    warmup_passes = 1
 
     def build(self) -> None:
         """Create or load the seeded inputs (cached; not part of set-up)."""
@@ -407,8 +409,7 @@ class Workload:
 
 
 def run_window(wl: Workload, spark, tracer: Tracer, seconds: float, first_pass: int,
-               results: list[OpResult], passes: list[float], problems: list[str],
-               ctx_extra: dict) -> int:
+               results: list[OpResult], problems: list[str], ctx_extra: dict) -> int:
     """Closed loop: one client runs ops back to back until ``seconds`` of
     op time have been spent; a pass that has begun is finished so at
     least one whole pass is always measured. Returns the next pass no."""
@@ -442,24 +443,37 @@ def run_window(wl: Workload, spark, tracer: Tracer, seconds: float, first_pass: 
             problems.extend(wl.after_pass(spark))
         except Exception as e:
             problems.append(f"p{p} checks failed: {type(e).__name__}: {str(e)[:300]}")
-        passes.append(t_pass)
         spent += t_pass
         p += 1
         if spent >= seconds:
             return p
 
 
-def summarize(results: list[OpResult], passes: list[float]) -> dict:
-    times = [r.seconds for r in results]
-    tail_v, tail_p, beyond = stats.tail(times)
+def summarize(results: list[OpResult]) -> dict:
+    """Window figures from per-op medians. A pass mixes ops of very
+    different lengths, so a median over the pooled op times falls in the
+    gap between two kinds of op and jumps with a few samples; each kind's
+    own median does not. ``pass_s`` is the sum of the kinds' medians (the
+    median pass, op by op), ``op_p50_s`` the median of the kinds' medians,
+    and ``rows_per_s`` the rows of one pass over ``pass_s``. ``op_tail_s``
+    follows ``stats.tail`` over the pooled op times; below the twenty
+    samples that rule needs, it is ``op_p50_s``."""
+    kinds: dict[str, list[OpResult]] = {}
+    for r in results:
+        kinds.setdefault(r.name.split("-", 1)[1], []).append(r)
+    medians = [stats.median([r.seconds for r in rs]) for rs in kinds.values()]
+    pass_rows = sum(stats.median([r.rows for r in rs]) for rs in kinds.values())
+    pass_s = sum(medians)
+    tail_v, tail_p, beyond = stats.tail([r.seconds for r in results])
+    p50 = stats.median(medians)
     return {
-        "pass_s": stats.median(passes),
-        "op_p50_s": stats.median(times),
-        "op_tail_s": tail_v,
+        "pass_s": pass_s,
+        "op_p50_s": p50,
+        "op_tail_s": tail_v if beyond >= 10 else p50,
         "tail_percentile": tail_p,
         "tail_beyond": beyond,
-        "ops": len(times),
-        "rows_per_s": sum(r.rows for r in results) / sum(times),
+        "ops": len(results),
+        "rows_per_s": pass_rows / pass_s,
     }
 
 

@@ -101,35 +101,38 @@ def run(args) -> dict:
 
         _phase("set up")
         meter.start()
-        # Warm-up pass: pays JIT and codegen, fills the fixture's memo and
-        # records the reference outputs later passes are checked against.
+        # Warm-up: the first pass pays JIT and codegen, fills the fixture's
+        # memo and records the reference outputs later passes are checked
+        # against; the workload's further warm-up passes let the JIT settle.
         t0 = time.perf_counter()
         warm: list[harness.OpResult] = []
         extra: dict = {}
-        next_pass = harness.run_window(wl, spark, tracer, 0.0, 0, warm, [], problems, extra)
-        warmup_s = time.perf_counter() - t0
+        next_pass = harness.run_window(wl, spark, tracer, 0.0, 0, warm, problems, extra)
         spark.sparkContext.setJobGroup("perfbench-checks", "perfbench reference checks")
         problems += wl.warmup_check(spark)
+        while next_pass < wl.warmup_passes:
+            next_pass = harness.run_window(wl, spark, tracer, 0.0, next_pass, warm, problems, extra)
+        warmup_s = time.perf_counter() - t0
         _phase("warmed up")
 
         snap = _contention_snapshot()
         untraced: list[harness.OpResult] = []
-        passes: list[float] = []
         window = args.seconds / 2 if args.trace else args.seconds
-        next_pass = harness.run_window(wl, spark, tracer, window, next_pass, untraced, passes, problems, extra)
+        first_pass = next_pass
+        next_pass = harness.run_window(wl, spark, tracer, window, next_pass, untraced, problems, extra)
+        untraced_passes = next_pass - first_pass
         traced: list[harness.OpResult] = []
-        traced_passes: list[float] = []
         if args.trace:
             tracer.enabled = True
             extra.clear()
-            harness.run_window(wl, spark, tracer, window, next_pass, traced, traced_passes, problems, extra)
+            harness.run_window(wl, spark, tracer, window, next_pass, traced, problems, extra)
         ext_cores = _ext_cores(snap, _contention_snapshot())
         meter.stop()
         _phase("window done")
         canary = canary_sec()
 
         results = warm + untraced + traced
-        summary = harness.summarize(untraced, passes)
+        summary = harness.summarize(untraced)
         failed = sum(not r.ok for r in results)
         for r in results:
             if not r.ok:
@@ -150,7 +153,7 @@ def run(args) -> dict:
             "setups_s": [round(s, 3) for s in setups],
             "warmup_s": round(warmup_s, 3),
             "input_gen_s": round(input_s, 3),
-            "passes": len(passes),
+            "passes": untraced_passes,
             "host": {"canary_quiet_s": canary_quiet, "canary_s": canary,
                      "load_factor": round(canary / canary_quiet, 3), "ext_cores": ext_cores},
         }
@@ -163,8 +166,7 @@ def run(args) -> dict:
                 "python.workers_started": len(meter.workers),
             }
             # still tracing: the workload's in-process layer probes record spans too
-            layer.update(layer_metrics(wl, spark, tracer, results, traced, traced_passes,
-                                       untraced, passes, extra))
+            layer.update(layer_metrics(wl, spark, tracer, results, traced, untraced, extra))
             tracer.enabled = False
             metrics = {k: {"value": float(layer.get(k, 0.0)), "unit": u} for k, u in units("per_layer").items()}
             tracer.write(os.path.join(harness.CACHE, "traces", f"{args.workload}-seed{args.seed}.json"))
@@ -187,7 +189,7 @@ def run(args) -> dict:
         _phase(f"torn down in {time.perf_counter() - t0:.2f}s")
 
 
-def layer_metrics(wl, spark, tracer, results, traced, traced_passes, untraced, passes, extra) -> dict:
+def layer_metrics(wl, spark, tracer, results, traced, untraced, extra) -> dict:
     out: dict[str, float] = {}
     traced_ids = [r.name for r in traced]
     groups = harness.spark_metrics_by_group(spark, traced_ids)
@@ -204,8 +206,8 @@ def layer_metrics(wl, spark, tracer, results, traced, traced_passes, untraced, p
     out["spark.exec_s"] = per_op.get("execute", 0.0) / n
     nodes = extra.get("python_nodes", [])
     out["python.plan_nodes"] = sum(nodes) / max(len(nodes), 1)
-    untraced_pass = stats.median(passes)
-    traced_pass = stats.median(traced_passes)
+    untraced_pass = harness.summarize(untraced)["pass_s"]
+    traced_pass = harness.summarize(traced)["pass_s"]
     out["trace.pass_s_untraced"] = untraced_pass
     out["trace.pass_s_traced"] = traced_pass
     out["trace.overhead_s"] = traced_pass - untraced_pass

@@ -1,4 +1,5 @@
-"""The tail-percentile rule and span self-time arithmetic."""
+"""The tail-percentile rule, the per-op window summary and span self-time
+arithmetic."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import statistics
 import pytest
 
 from perfbench import stats
+from perfbench.harness import OpResult, summarize
 from perfbench.trace import Span, Tracer, self_time
 
 
@@ -42,6 +44,29 @@ def test_spread_is_iqr_over_median():
     xs = [1.0, 2.0, 3.0, 4.0, 5.0]
     q1, q2, q3 = statistics.quantiles(xs, n=4)
     assert stats.spread(xs) == pytest.approx((q3 - q1) / q2)
+
+
+def _ops(kind, secs, rows, first_pass=1):
+    return [OpResult(f"p{first_pass + i}-{kind}", s, rows, True) for i, s in enumerate(secs)]
+
+
+def test_summary_uses_each_kind_of_op_median():
+    # one slow outlier per kind moves nothing; the pooled median of these
+    # six samples (0.9) would sit in the gap between the two kinds
+    res = _ops("scan", [1.0, 1.2, 5.0], 300) + _ops("probe", [0.1, 0.2, 0.8], 10)
+    got = summarize(res)
+    assert got["pass_s"] == pytest.approx(1.2 + 0.2)
+    assert got["op_p50_s"] == pytest.approx((1.2 + 0.2) / 2)
+    assert got["rows_per_s"] == pytest.approx(310 / 1.4)
+    assert (got["tail_percentile"], got["op_tail_s"]) == (50, got["op_p50_s"])  # too few for a tail
+
+
+def test_summary_tail_over_pooled_ops_from_twenty_samples():
+    res = _ops("a", [float(i) for i in range(1, 21)], 1)
+    got = summarize(res)
+    assert (got["op_tail_s"], got["tail_percentile"], got["tail_beyond"]) == stats.tail([r.seconds for r in res])
+    got = summarize(_ops("a", [float(i) for i in range(1, 41)], 1))
+    assert (got["op_tail_s"], got["tail_percentile"]) == (30.0, 75)
 
 
 def _span(i, start, end, parent=None):

@@ -48,6 +48,10 @@ def _expected_tables(data: dict, out_dir: str) -> None:
 
 class ODataIngest(harness.Workload):
     name = "odata_ingest"
+    # Op times still fall for a few passes after the first (JIT). On a
+    # 4-core host a pass took 4.0-4.8 s in passes 1-2 and 3.3-3.9 s from
+    # pass 3 on.
+    warmup_passes = 3
 
     def __init__(self, seed: int, tracer):
         self.seed = seed
@@ -162,7 +166,7 @@ class ODataIngest(harness.Workload):
     def warmup_check(self, spark) -> list[str]:
         """Expected (rows, hash) per op from the generator's rows, read
         as parquet and cast to the connector's schema, one job per entity
-        set; the warm-up pass's outputs are checked against them."""
+        set; the first warm-up pass's outputs are checked against them."""
         from pyspark.sql import functions as F
 
         frames = self._frames()
